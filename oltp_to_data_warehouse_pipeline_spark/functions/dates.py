@@ -12,7 +12,7 @@ rule (SURVEY.md §2.7 F13-F18; §7 "hard parts" (b)):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -81,9 +81,3 @@ def date_parts(c: Column | str) -> dict[str, Column]:
         "is_weekday": is_weekday(col),
         "is_leapyear": is_leapyear(col),
     }
-
-
-def with_date_parts(df: DataFrame, c: str, prefix: str = "") -> DataFrame:
-    """Attach every F13-F18 derivation as columns (single projection)."""
-    parts = date_parts(c)
-    return df.withColumns({f"{prefix}{name}": expr for name, expr in parts.items()})

@@ -400,7 +400,8 @@ def connected_components(
     LSH seeds); graphs past the bound take the distributed loop
     unchanged.  Both paths produce the identical (node, min-reachable-id)
     relation — tests/test_dedup.py property-checks them against each
-    other.
+    other.  The distributed loop raises ``RuntimeError`` when labels are
+    still changing after ``max_iter`` rounds.
     """
     sym = pairs.select(F.col(a).alias("s"), F.col(b).alias("d")).union(
         pairs.select(F.col(b).alias("s"), F.col(a).alias("d"))
@@ -479,6 +480,12 @@ def connected_components(
         labels = new_labels.select("node", "lbl")
         if not changed:
             break
+    else:
+        # the last round still moved labels: returning them would hand
+        # back a partial clustering that looks like a converged one
+        raise RuntimeError(
+            f"connected_components did not converge in {max_iter} rounds"
+        )
     return labels
 
 

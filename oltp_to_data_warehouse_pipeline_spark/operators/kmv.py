@@ -45,6 +45,19 @@ bounds it coarse-then-exact, in the house style of
   bit-identical to the unfiltered formulation by construction, not by
   probabilistic argument.
 
+That threshold → survivors → audit → kept/rescued → bottom-k plan is
+written once, in :func:`_bottom_k_sketch`; the quantile sketch
+(:mod:`operators.qsketch`) builds on the same function with an exact
+row-count sizer and non-distinct ``(h, v)`` survivors.  Its group-keyed
+joins always carry broadcast hints, so callers' group domains must be
+bounded (days, months, quarters, cohorts).
+
+Bounded driver path: :func:`kmv_sketch_rows` returns the same sketch as
+driver-held tuples when the threshold and survivor relations fit under
+:data:`DRIVER_MAX_ROWS` (one collect each instead of two
+``localCheckpoint`` pins), and ``None`` otherwise — the caller then
+builds the distributed sketch.
+
 Estimator error is the standard KMV ~1/sqrt(k-2) relative sd
 (tests/test_kmv.py asserts it statistically — the round-6 bootstrap
 lesson: the cross-engine gate proves agreement, not validity).
@@ -58,7 +71,11 @@ from pyspark.sql import functions as F
 from oltp_to_data_warehouse_pipeline_spark.util import md5_fold48
 
 HASH_SPACE = 1 << 48  # md5_fold48 range: [0, 2^48)
-_SAFETY = 4  # threshold headroom over the HLL estimate (rsd 0.02)
+_SAFETY = 4  # threshold headroom over the group-size estimate
+# Row bound on each collect of the driver path (kmv_sketch_rows): ~100 B
+# per narrow tuple, so <= ~10 MB on the driver — the same posture as
+# connected_components.driver_max_edges.
+DRIVER_MAX_ROWS = 100_000
 
 
 def _ns_join(
@@ -91,120 +108,125 @@ def kmv_hash(key: Column | str) -> Column:
     return md5_fold48(key, "kmv|")
 
 
-def is_driver_materialized(df: DataFrame) -> bool:
-    """True when a sketch DataFrame was produced by the bounded driver
-    path (a local relation: already materialized, nothing upstream to
-    pin).  Callers that would otherwise ``localCheckpoint`` the sketch
-    can skip the redundant pin job."""
-    return bool(getattr(df, "_sketch_driver_materialized", False))
+def _bottom_k(
+    rows: DataFrame, group_cols: list[str], order: list[str], k: int
+) -> DataFrame:
+    """Per-group first ``k`` rows of ``rows`` by ``order`` (ties broken
+    arbitrarily — callers order by every payload column)."""
+    w = Window.partitionBy(*group_cols).orderBy(*order)
+    return (
+        rows.withColumn("__r", F.row_number().over(w))
+        .where(F.col("__r") <= k)
+        .select(*group_cols, *order)
+    )
 
 
-def driver_rows(df: DataFrame) -> list | None:
-    """The sketch's rows as held by the driver path (list of tuples in
-    the DataFrame's column order), or None for a distributed sketch.
-    Lets a bounded consumer (e.g. the intersect estimator) compute
-    driver-side without re-collecting the local relation (a ``collect``
-    on a parallelized local relation still launches a job)."""
-    return getattr(df, "_sketch_local_rows", None)
+def _thresholds(
+    rows: DataFrame, group_cols: list[str], sizer: Column, k: int
+) -> DataFrame:
+    """``(group…, __t)`` — one row per group: the hash admission threshold
+    ``SAFETY·k/n · 2^48`` from the group size ``n = sizer``, or
+    ``HASH_SPACE`` (admit all) when ``n ≤ SAFETY·k``.  The sizer
+    aggregates map-side, so the exchange carries one partial per group
+    independent of key cardinality."""
+    return rows.groupBy(*group_cols).agg(sizer.alias("__n")).select(
+        *group_cols,
+        F.when(F.col("__n") <= _SAFETY * k, F.lit(HASH_SPACE))
+        .otherwise(
+            (F.lit(float(_SAFETY * k * HASH_SPACE)) / F.col("__n")).cast("bigint")
+        )
+        .alias("__t"),
+    )
 
 
-def _mark_driver_materialized(df: DataFrame, rows: list) -> DataFrame:
-    df._sketch_driver_materialized = True  # type: ignore[attr-defined]
-    df._sketch_local_rows = rows  # type: ignore[attr-defined]
-    return df
+def _survivors(
+    raw: DataFrame, thresholds: DataFrame, group_cols: list[str], distinct: bool
+) -> DataFrame:
+    """The raw payload rows whose hash is under their group's threshold —
+    applied SCAN-SIDE, before any distinct or rank shuffle (that ordering
+    is the whole point of the prefilter)."""
+    s = (
+        _ns_join(raw, thresholds, group_cols, "inner")
+        .where(F.col("h") < F.col("__t"))
+        .select(*raw.columns)
+    )
+    return s.distinct() if distinct else s
 
 
-def _kmv_driver_sketch(
-    df: DataFrame,
-    key: str,
+def _bottom_k_sketch(
+    rows: DataFrame,
     group_cols: list[str],
+    payload: list[Column],
+    sizer: Column,
     k: int,
-    max_rows: int,
-) -> DataFrame | None:
-    """Bounded driver path for :func:`kmv_sketch` — the round-12 follow-up
-    to the round-11 checkpoint audit: each eager ``localCheckpoint`` pin
-    costs ~0.5 s of fixed job overhead at sf0.1, and for a sketch whose
-    intermediates are ≤ max_rows BY CONSTRUCTION the cheaper barrier is a
-    driver collect (guide §5: bounded driver work; the
-    ``connected_components`` ``driver_max_edges`` precedent).  Returns the
-    finished ≤ k-rows-per-group sketch as a LOCAL relation (no further
-    jobs to consume it, broadcast-sized for any downstream join), or
-    ``None`` when an intermediate exceeds ``max_rows`` — the caller then
-    takes the distributed path unchanged (no silent cliff; the two wasted
-    sizing jobs are the documented fallback cost).
+    distinct: bool,
+    prefilter: bool,
+    pin: bool,
+) -> DataFrame:
+    """``(group…, payload…)`` — per group, the ``k`` smallest payload rows
+    (ordered by every payload column, hash ``h`` first) of the NULL-free
+    input ``rows``; ``distinct`` de-duplicates payload rows first.
 
-    Step-for-step parity with the distributed formulation (each step is
-    the same relation, so the output is bit-identical by construction):
-    active thresholds = the ``__t < HASH_SPACE`` rows of ``thresholds``;
-    survivors = raw ∩ (h < t, inactive groups unfiltered), distinct;
-    audit = active groups with < k survivors (zero-survivor active groups
-    INCLUDED — they are absent from the survivor dict and default to 0);
-    rescued = per-audit-group distinct raw hashes, ranked ≤ k
-    distributed-side so the driver never holds an unbounded rescue set;
-    final = per-group k smallest over kept ∪ rescued (disjoint by group,
-    so per-branch ranking equals the union rank).
-    """
-    g = [F.col(c) for c in group_cols]
-    spark = df.sparkSession
-    active = (
-        df.where(F.col(key).isNotNull())
-        .groupBy(*g)
-        .agg(F.approx_count_distinct(key, rsd=0.02).alias("__acd"))
-        .where(F.col("__acd") > _SAFETY * k)
-        .select(
-            *g,
-            (F.lit(float(_SAFETY * k * HASH_SPACE)) / F.col("__acd"))
-            .cast("bigint")
-            .alias("__t"),
+    ``prefilter=False`` ranks every payload row: the reference
+    formulation the tests and the oracle replay.  ``prefilter=True``
+    admits only hashes under the :func:`_thresholds` cut, then audits:
+    a group whose ACTIVE threshold (< HASH_SPACE) admitted fewer than k
+    rows could have lost part of its true bottom-k, so it is rescued
+    with its unfiltered rows.  The output equals the reference
+    formulation by construction.
+
+    ``pin`` materializes the two bounded intermediates (thresholds: one
+    row per group; survivors: ~SAFETY·k rows per group) with
+    ``localCheckpoint`` — without it the kept/audit/rescue branches each
+    re-derive them and the physical plan explodes to ~18 input scans / 42
+    exchanges (measured: 2.0 s → ~0.5 s at sf0.1).  ``pin=False`` keeps
+    plan construction job-free for lazily registered views.
+
+    The group-keyed joins carry broadcast hints: the relations are one
+    row per group, and checkpoint-derived ones have no size estimate, so
+    without the hints the planner sort-merges them (round-11 plan audit).
+    This is why callers' group domains must be bounded."""
+    raw = rows.select(*group_cols, *payload)
+    order = raw.columns[len(group_cols):]
+
+    def dedup(d: DataFrame) -> DataFrame:
+        return d.distinct() if distinct else d
+
+    if not prefilter:
+        return _bottom_k(dedup(raw), group_cols, order, k)
+    thresholds = _thresholds(rows, group_cols, sizer, k)
+    if pin:
+        thresholds = thresholds.localCheckpoint(eager=True)
+    survivors = _survivors(raw, F.broadcast(thresholds), group_cols, distinct)
+    if pin:
+        survivors = survivors.localCheckpoint(eager=True)
+    # The audit starts from THRESHOLDS (one row per group, complete by
+    # construction) left-joined to survivor counts — starting from
+    # survivors would silently DROP a group whose every hash landed above
+    # its threshold (zero survivors ⇒ no groupBy row ⇒ neither kept nor
+    # rescued; the hash and the sizer differ, so such inputs exist).  At
+    # rsd 2% the rescue branch is empty; it exists so the equality with
+    # the plain formulation is structural, not probabilistic.
+    audit = (
+        _ns_join(
+            thresholds,
+            F.broadcast(
+                survivors.groupBy(*group_cols).agg(
+                    F.count(F.lit(1)).alias("__nsurv")
+                )
+            ),
+            group_cols,
+            "left",
         )
+        .where(
+            (F.coalesce(F.col("__nsurv"), F.lit(0)) < k)
+            & (F.col("__t") < HASH_SPACE)
+        )
+        .select(*group_cols)
     )
-    trows = active.limit(max_rows + 1).collect()
-    if len(trows) > max_rows:
-        return None
-    raw = df.where(F.col(key).isNotNull()).select(*g, kmv_hash(key).alias("h"))
-    if trows:
-        lt = spark.createDataFrame(trows, active.schema)
-        survivors = (
-            _ns_join(raw, F.broadcast(lt), group_cols, "left")
-            .where(F.col("h") < F.coalesce(F.col("__t"), F.lit(HASH_SPACE)))
-            .select(*group_cols, "h")
-            .distinct()
-        )
-    else:
-        survivors = raw.distinct()
-    srows = survivors.limit(max_rows + 1).collect()
-    if len(srows) > max_rows:
-        return None
-    ng = len(group_cols)
-    surv: dict[tuple, list] = {}
-    for r in srows:
-        surv.setdefault(tuple(r[:ng]), []).append(r[ng])
-    thr = {tuple(r[:ng]): r[ng] for r in trows}
-    audit = [gk for gk in thr if len(surv.get(gk, ())) < k]
-    out_rows: list[tuple] = []
-    if audit:
-        la = spark.createDataFrame(
-            audit, active.select(*group_cols).schema
-        )
-        w = Window.partitionBy(*group_cols).orderBy("h")
-        resc = (
-            _ns_join(raw, F.broadcast(la), group_cols, "left_semi")
-            .select(*group_cols, "h")
-            .distinct()
-            .withColumn("__r", F.row_number().over(w))
-            .where(F.col("__r") <= k)
-            .select(*group_cols, "h")
-        )
-        out_rows.extend(tuple(r) for r in resc.collect())
-        for gk in audit:
-            surv.pop(gk, None)
-    for gk, hs in surv.items():
-        hs.sort()
-        out_rows.extend(gk + (h,) for h in hs[:k])
-    schema = raw.schema
-    return _mark_driver_materialized(
-        spark.createDataFrame(out_rows, schema), out_rows
-    )
+    kept = _ns_join(survivors, F.broadcast(audit), group_cols, "left_anti")
+    rescued = dedup(_ns_join(raw, F.broadcast(audit), group_cols, "left_semi"))
+    return _bottom_k(kept.unionByName(rescued), group_cols, order, k)
 
 
 def kmv_sketch(
@@ -214,125 +236,89 @@ def kmv_sketch(
     k: int = 64,
     prefilter: bool = True,
     pin: bool = True,
-    driver_max_rows: int | None = None,
-    bounded_groups: bool = True,
 ) -> DataFrame:
-    """``(group…, h)`` — the ≤ k smallest distinct key hashes per group.
+    """``(group…, h)`` — the ≤ k smallest distinct key hashes per group
+    (NULL keys ignored).  ``group_cols`` must span a bounded domain
+    (days, cohorts, quarters): the prefilter broadcasts one-row-per-group
+    relations.
 
     ``prefilter=True`` is the scale path (HLL-sized hash threshold +
     under-k rescue, module docstring); ``False`` is the plain formulation
     the oracle replays.  Both return the same relation by construction.
-
-    ``pin=True`` materializes the two BOUNDED intermediates
-    (``thresholds``: one row per group; ``survivors``: ~SAFETY·k rows per
-    group) via ``localCheckpoint`` — without it the kept/audit/rescue
-    branches each re-derive them and the physical plan explodes to ~18
-    input scans / 42 exchanges (measured: 2.0 s → this fix → ~0.5 s at
-    sf0.1).  Leave True unless the GROUP count itself is too large to
-    cache (e.g. sketches per user over 10⁹ users), where recomputation —
-    or a caller-owned persist — is the right trade.
-
-    ``driver_max_rows`` (opt-in; None = off) engages the bounded DRIVER
-    path when the prefilter intermediates fit under the bound
-    (:func:`_kmv_driver_sketch`): the checkpoint pins' per-job overhead
-    disappears and the finished sketch comes back as a local relation
-    (check :func:`is_driver_materialized` before re-pinning it).  Size
-    the bound like ``connected_components.driver_max_edges``: the collect
-    holds ≤ max_rows narrow tuples on the driver (~100 B each — 100k rows
-    ≈ 10 MB).  Callers whose group count is unbounded (per-user sketches)
-    must leave it None; past the bound the function falls back to the
-    distributed path at the cost of the two wasted sizing jobs.
-
-    ``bounded_groups`` gates the distributed path's broadcast hints on
-    the GROUP-cardinality-bounded relations (thresholds, survivor counts,
-    audit groups — all "one row per group"; round-11 verdict: a forced
-    broadcast is a driver-OOM cliff when ``group_cols`` is
-    high-cardinality, exactly where the old SortMergeJoin merely
-    crawled).  Leave True when the group count is bounded by
-    construction (days, cohorts, quarters); set False for unbounded
-    group domains — the planner then picks the join from its own size
-    estimates (shuffle join on checkpoint-derived inputs).
+    ``pin`` materializes the prefilter's two bounded intermediates (see
+    :func:`_bottom_k_sketch`); set False only to build the plan without
+    running jobs.
     """
-    g = [F.col(c) for c in group_cols]
-    if prefilter and driver_max_rows is not None:
-        local = _kmv_driver_sketch(df, key, group_cols, k, driver_max_rows)
-        if local is not None:
-            return local
-    bhint = F.broadcast if bounded_groups else (lambda d: d)
-    raw = df.where(F.col(key).isNotNull()).select(*g, kmv_hash(key).alias("h"))
-    if prefilter:
-        # Coarse: per-group HLL estimate -> hash admission threshold.
-        # Map-side partial aggregation; the exchange carries one HLL
-        # register set per group, independent of key cardinality.  The
-        # threshold filter applies SCAN-SIDE, before any distinct shuffle —
-        # that ordering is the whole point of the sketch build.
-        thresholds = (
-            df.where(F.col(key).isNotNull())
-            .groupBy(*g)
-            .agg(F.approx_count_distinct(key, rsd=0.02).alias("__acd"))
-            .withColumn(
-                "__t",
-                F.when(F.col("__acd") <= _SAFETY * k, F.lit(HASH_SPACE)).otherwise(
-                    (F.lit(float(_SAFETY * k * HASH_SPACE)) / F.col("__acd")).cast("bigint")
-                ),
-            )
-            .select(*g, "__t")
-        )
-        if pin:
-            thresholds = thresholds.localCheckpoint(eager=True)
-        survivors = (
-            _ns_join(raw, bhint(thresholds), group_cols, "inner")
-            .where(F.col("h") < F.col("__t"))
-            .select(*group_cols, "h")
-            .distinct()
-        )
-        if pin:
-            survivors = survivors.localCheckpoint(eager=True)
-        # Exact-verify the coarse step: a group whose active threshold
-        # (< HASH_SPACE) admitted fewer than k distinct hashes COULD have
-        # lost part of its true k-minimum set; rescue it with its
-        # unfiltered hash set.  The audit starts from THRESHOLDS (one row
-        # per group, complete by construction) left-joined to survivor
-        # counts — starting from survivors would silently DROP a group
-        # whose every hash landed above its threshold (zero survivors ⇒ no
-        # groupBy row ⇒ neither kept nor rescued; md5_fold48 and the HLL
-        # sizer hash differently, so such inputs exist).  Both joins
-        # broadcast.  At rsd 2% the rescue branch is empty; it exists so
-        # the equality with the plain formulation is structural, not
-        # probabilistic.
-        audit = (
-            _ns_join(
-                thresholds,
-                # one row per group, but checkpoint-derived (unknown size
-                # estimate) — without the hint the planner sort-merges two
-                # group-count relations (round-11 plan audit)
-                bhint(
-                    survivors.groupBy(*g).agg(F.count(F.lit(1)).alias("__nsurv"))
-                ),
-                group_cols,
-                "left",
-            )
-            .where(
-                (F.coalesce(F.col("__nsurv"), F.lit(0)) < k)
-                & (F.col("__t") < HASH_SPACE)
-            )
-            .select(*group_cols)
-        )
-        kept = _ns_join(survivors, bhint(audit), group_cols, "left_anti")
-        rescued = (
-            _ns_join(raw, bhint(audit), group_cols, "left_semi")
-            .select(*group_cols, "h")
-            .distinct()
-        )
-        hashes = kept.select(*group_cols, "h").unionByName(rescued)
-    else:
-        hashes = raw.select(*group_cols, "h").distinct()
-    w = Window.partitionBy(*group_cols).orderBy("h")
-    return (
-        hashes.withColumn("__r", F.row_number().over(w))
-        .where(F.col("__r") <= k)
-        .select(*group_cols, "h")
+    return _bottom_k_sketch(
+        df.where(F.col(key).isNotNull()),
+        group_cols,
+        [kmv_hash(key).alias("h")],
+        F.approx_count_distinct(key, rsd=0.02),
+        k,
+        distinct=True,
+        prefilter=prefilter,
+        pin=pin,
     )
+
+
+def kmv_sketch_rows(
+    df: DataFrame, key: str, group_cols: list[str], k: int
+) -> list[tuple] | None:
+    """:func:`kmv_sketch` as driver-held ``(group…, h)`` tuples, or
+    ``None`` when the thresholds or the survivors exceed
+    :data:`DRIVER_MAX_ROWS` rows — the caller then builds the distributed
+    sketch.
+
+    Each eager ``localCheckpoint`` pin costs ~0.5 s of fixed job overhead
+    at sf0.1; for a sketch whose intermediates are bounded BY
+    CONSTRUCTION the cheaper barrier is a bounded collect (the
+    ``connected_components.driver_max_edges`` precedent).  The thresholds
+    and survivors are the distributed build's own relations; the audit
+    (active groups with < k survivors, zero-survivor groups included) and
+    the per-group k smallest run on the driver, and an audited group gets
+    the plain formulation distributed-side, so the driver never holds an
+    unbounded rescue set.  The result equals the distributed sketch row
+    for row.
+    """
+    rows = df.where(F.col(key).isNotNull())
+    raw = rows.select(*group_cols, kmv_hash(key).alias("h"))
+    thresholds = _thresholds(
+        rows, group_cols, F.approx_count_distinct(key, rsd=0.02), k
+    )
+    trows = thresholds.limit(DRIVER_MAX_ROWS + 1).collect()
+    if len(trows) > DRIVER_MAX_ROWS:
+        return None
+    spark = df.sparkSession
+    local_t = spark.createDataFrame(trows, thresholds.schema)
+    srows = (
+        _survivors(raw, F.broadcast(local_t), group_cols, distinct=True)
+        .limit(DRIVER_MAX_ROWS + 1)
+        .collect()
+    )
+    if len(srows) > DRIVER_MAX_ROWS:
+        return None
+    ng = len(group_cols)
+    surv: dict[tuple, list] = {}
+    for r in srows:
+        surv.setdefault(tuple(r[:ng]), []).append(r[ng])
+    audit = [
+        tuple(r[:ng])
+        for r in trows
+        if r[ng] < HASH_SPACE and len(surv.get(tuple(r[:ng]), ())) < k
+    ]
+    out: list[tuple] = []
+    if audit:
+        local_a = spark.createDataFrame(
+            audit, thresholds.select(*group_cols).schema
+        )
+        audited = _ns_join(rows, F.broadcast(local_a), group_cols, "left_semi")
+        rescued = kmv_sketch(audited, key, group_cols, k, prefilter=False)
+        out.extend(tuple(r) for r in rescued.collect())
+        for gk in audit:
+            surv.pop(gk, None)
+    for gk, hs in surv.items():
+        out.extend(gk + (h,) for h in sorted(hs)[:k])
+    return out
 
 
 def kmv_merge(sketch: DataFrame, group_cols: list[str], k: int) -> DataFrame:
@@ -341,13 +327,8 @@ def kmv_merge(sketch: DataFrame, group_cols: list[str], k: int) -> DataFrame:
     Input is ≤ k rows per fine group, so the rank shuffle is sketch-sized.
     ``distinct()`` first: the same key hash can appear under many fine
     groups."""
-    w = Window.partitionBy(*group_cols).orderBy("h")
-    return (
-        sketch.select(*group_cols, "h")
-        .distinct()
-        .withColumn("__r", F.row_number().over(w))
-        .where(F.col("__r") <= k)
-        .select(*group_cols, "h")
+    return _bottom_k(
+        sketch.select(*group_cols, "h").distinct(), group_cols, ["h"], k
     )
 
 

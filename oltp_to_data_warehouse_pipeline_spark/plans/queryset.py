@@ -8904,14 +8904,12 @@ def cms_sketch_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _KMV_K = 64
-# Bounded driver path (round 12): the cohort sketches' prefilter
-# intermediates are a handful of rows per bounded group set (2 cohorts /
-# ~28 quarters x ~84 months), so the eager-checkpoint pins — ~0.5 s of
-# fixed job overhead EACH at sf0.1 (round-11 job profile) — are replaced
-# by one bounded collect; past this row bound the operator falls back to
-# the distributed path unchanged.  ~100 B/row -> <= ~10 MB on the driver,
-# the same posture as connected_components.driver_max_edges.
-_SKETCH_DRIVER_MAX = 100_000
+# The cohort-overlap queries take the sketch family's one driver path,
+# kmv.kmv_sketch_rows: their prefilter intermediates are a handful of rows
+# per cohort, so one bounded collect each replaces the two eager
+# localCheckpoint pins (~0.5 s of fixed job overhead EACH at sf0.1).  Past
+# kmv.DRIVER_MAX_ROWS it returns None and the query pins the distributed
+# kmv_sketch instead.  Every other sketch query builds distributed.
 # (k-1) * 2^48 — the KMV estimator numerator, BIGINT-exact on both engines.
 _KMV_NUM = (_KMV_K - 1) * (1 << 48)
 _KMV_EST = (
@@ -9326,15 +9324,11 @@ def kmv_cohort_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = o.withColumn("yr", F.year("o_orderdate"))
     cohorts = o.where(F.col("yr").isin(1995, 1998))
     # The ≤ 2k-row sketch feeds BOTH intersect-estimate inputs; the
-    # bounded driver path materializes it as a local relation (build runs
-    # once, zero pin jobs) — exactly the "stored sketches" deployment this
-    # query models; if the bound ever trips, pin the distributed build so
-    # it still runs once.
-    sk = kmv.kmv_sketch(
-        cohorts, "o_custkey", ["yr"], k=_KMV_K, prefilter=True,
-        driver_max_rows=_SKETCH_DRIVER_MAX,
-    )
-    rows = kmv.driver_rows(sk)
+    # bounded driver path holds it as rows (build runs once, zero pin
+    # jobs) — exactly the "stored sketches" deployment this query models;
+    # if the bound ever trips, pin the distributed build so it still runs
+    # once.
+    rows = kmv.kmv_sketch_rows(cohorts, "o_custkey", ["yr"], k=_KMV_K)
     if rows is not None:
         # driver-held sketch: the overlap math is a few hundred exact
         # integer ops — the distributed estimate plan costs ~1.2 s of
@@ -9346,7 +9340,9 @@ def kmv_cohort_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
             k=_KMV_K,
         ).select(F.col("est_common").alias("kmv_common"))
     else:
-        sk = sk.localCheckpoint(eager=True)
+        sk = kmv.kmv_sketch(
+            cohorts, "o_custkey", ["yr"], k=_KMV_K, prefilter=True
+        ).localCheckpoint(eager=True)
         est = kmv.kmv_intersect_estimate(
             sk.where(F.col("yr") == 1995),
             sk.where(F.col("yr") == 1998),
@@ -9417,15 +9413,11 @@ def kmv_cohort_overlap_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     cohorts = o.where(F.col("yr").isin(1995, 1998))
     # kmv_intersect_estimate consumes each cohort slice twice (union +
     # membership marks), so the sketch must be materialized ONCE: the
-    # bounded driver path returns it as a local relation (zero pin jobs);
-    # if the bound ever trips, the distributed build is pinned instead
-    # (round-11 A/B: unpinned 3.57s vs pinned 1.97s at sf0.1 — the
-    # unpinned tail replays per consumer).
-    sk = kmv.kmv_sketch(
-        cohorts, "o_custkey", ["yr"], k=_KMV_K, prefilter=True,
-        driver_max_rows=_SKETCH_DRIVER_MAX,
-    )
-    rows = kmv.driver_rows(sk)
+    # bounded driver path holds it as rows (zero pin jobs); if the bound
+    # ever trips, the distributed build is pinned instead (round-11 A/B:
+    # unpinned 3.57s vs pinned 1.97s at sf0.1 — the unpinned tail replays
+    # per consumer).
+    rows = kmv.kmv_sketch_rows(cohorts, "o_custkey", ["yr"], k=_KMV_K)
     if rows is not None:
         return kmv.kmv_intersect_estimate_rows(
             spark,
@@ -9433,7 +9425,9 @@ def kmv_cohort_overlap_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
             [h for yr, h in rows if yr == 1998],
             k=_KMV_K,
         ).select(F.col("est_common").alias("kmv_common"))
-    sk = sk.localCheckpoint(eager=True)
+    sk = kmv.kmv_sketch(
+        cohorts, "o_custkey", ["yr"], k=_KMV_K, prefilter=True
+    ).localCheckpoint(eager=True)
     return kmv.kmv_intersect_estimate(
         sk.where(F.col("yr") == 1995),
         sk.where(F.col("yr") == 1998),
@@ -10027,7 +10021,7 @@ def qsketch_price_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     columns are the audit half (full per-quarter rank — re-aggregates raw
     rows by design, dropped at 100 TB); they also exhibit the DKW
     sampling error the unit suite bounds."""
-    from oltp_to_data_warehouse_pipeline_spark.operators import kmv, qsketch
+    from oltp_to_data_warehouse_pipeline_spark.operators import qsketch
 
     o = load_table(spark, sf_dir, "orders")
     dated = o.select(
@@ -10041,22 +10035,11 @@ def qsketch_price_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_totalprice"),
     )
     sk = qsketch.qsample_sketch(
-        dated, "o_orderkey", "o_totalprice", ["qtr", "mth"], k=_QS_K,
-        driver_max_rows=_SKETCH_DRIVER_MAX,
+        dated, "o_orderkey", "o_totalprice", ["qtr", "mth"], k=_QS_K
     )
+    merged = qsketch.qsample_merge(sk, ["qtr"], k=_QS_K)
     probs = {"q50": 0.5, "q90": 0.9, "q99": 0.99}
-    rows = kmv.driver_rows(sk)
-    if rows is not None:
-        est = qsketch.qsample_quantiles_rows(
-            spark,
-            qsketch.qsample_merge_rows(rows, ["qtr", "mth"], ["qtr"], _QS_K),
-            [sk.schema["qtr"]],
-            sk.schema["v"],
-            probs,
-        )
-    else:
-        merged = qsketch.qsample_merge(sk, ["qtr"], k=_QS_K)
-        est = qsketch.qsample_quantiles(merged, ["qtr"], probs)
+    est = qsketch.qsample_quantiles(merged, ["qtr"], probs)
     raw = dated.where(F.col("o_totalprice").isNotNull()).select(
         "qtr",
         qsketch.qs_hash("o_orderkey").alias("h"),
@@ -10104,7 +10087,7 @@ def qsketch_price_quantiles_sketch(spark: SparkSession, sf_dir: str) -> DataFram
     scan-side threshold filter).  Benchmarked in bench.py in place of the
     audited twin, which stays oracle-gated (the kmv_daily_users_sketch
     precedent)."""
-    from oltp_to_data_warehouse_pipeline_spark.operators import kmv, qsketch
+    from oltp_to_data_warehouse_pipeline_spark.operators import qsketch
 
     o = load_table(spark, sf_dir, "orders")
     dated = o.select(
@@ -10118,25 +10101,12 @@ def qsketch_price_quantiles_sketch(spark: SparkSession, sf_dir: str) -> DataFram
         F.col("o_totalprice"),
     )
     sk = qsketch.qsample_sketch(
-        dated, "o_orderkey", "o_totalprice", ["qtr", "mth"], k=_QS_K,
-        driver_max_rows=_SKETCH_DRIVER_MAX,
+        dated, "o_orderkey", "o_totalprice", ["qtr", "mth"], k=_QS_K
     )
-    probs = {"q50": 0.5, "q90": 0.9, "q99": 0.99}
-    rows = kmv.driver_rows(sk)
-    if rows is not None:
-        # driver-held month sketch: merge + rank-pick are exact integer /
-        # lookup ops over <= k x |months| tuples; the distributed plan
-        # pays two window exchanges + the sketch re-upload for the same
-        # answer (round-12 profile)
-        return qsketch.qsample_quantiles_rows(
-            spark,
-            qsketch.qsample_merge_rows(rows, ["qtr", "mth"], ["qtr"], _QS_K),
-            [sk.schema["qtr"]],
-            sk.schema["v"],
-            probs,
-        )
     merged = qsketch.qsample_merge(sk, ["qtr"], k=_QS_K)
-    return qsketch.qsample_quantiles(merged, ["qtr"], probs)
+    return qsketch.qsample_quantiles(
+        merged, ["qtr"], {"q50": 0.5, "q90": 0.9, "q99": 0.99}
+    )
 
 
 @query(

@@ -176,10 +176,3 @@ def run_due(
         ran.append(t)
     n_done = len([1 for s, _ in state.values() if s == "success"])
     return {"ran": ran, "failed": failed, "skipped_done": n_done}
-
-
-def daily_spec(start_date: str, interval_s: int = 86_400) -> ScheduleSpec:
-    """Convenience: the reference DAG's ``start_date=datetime(2023, 1, 1)``
-    shape from an ISO date string."""
-    dt = datetime.fromisoformat(start_date).replace(tzinfo=timezone.utc)
-    return ScheduleSpec(start=int(dt.timestamp()), interval_s=interval_s)

@@ -232,37 +232,6 @@ def shutdown(query, drain: bool = True, timeout_s: float = 60.0) -> bool:
     return query.awaitTermination(remaining)
 
 
-def install_signal_shutdown(query, signals=None) -> None:
-    """Wire SIGINT/SIGTERM to :func:`shutdown`, like the reference's signal
-    handler (`mongo_postgres_cdc.py:403-406`).  Driver-side only.
-
-    After the query stops, the PREVIOUS handler is restored and the signal
-    re-raised, so the process still dies (or KeyboardInterrupt still fires)
-    — a handler that swallows the signal forever leaves an uninterruptible
-    driver that must be SIGKILLed."""
-    import os as _os
-    import signal as _signal
-
-    def _make(prev):
-        # getsignal() returns None for handlers installed by non-Python code
-        # (embedded interpreters, the JVM); signal() rejects None, so fall
-        # back to the default disposition.
-        restore = prev if prev is not None else _signal.SIG_DFL
-
-        def _handler(signum, frame):
-            # Restore BEFORE draining: a second Ctrl-C during the (up to
-            # timeout_s) graceful shutdown must hard-exit via the previous
-            # disposition, not re-enter another full drain.
-            _signal.signal(signum, restore)
-            shutdown(query)
-            _os.kill(_os.getpid(), signum)
-
-        return _handler
-
-    for sig in signals or (_signal.SIGINT, _signal.SIGTERM):
-        _signal.signal(sig, _make(_signal.getsignal(sig)))
-
-
 # -- tiny schema registry (per-topic JSON file beside the landing tables) ----
 
 
@@ -353,26 +322,3 @@ def process_microbatch_jdbc(
     return _route_microbatch(
         spark, batch, registry_dir, sink, table_prefix=table_prefix
     )
-
-
-def start_cdc_jdbc(
-    spark: SparkSession,
-    stream: DataFrame,
-    cfg,
-    registry_dir: str,
-    checkpoint_dir: str,
-    dialect: str = "ansi",
-    trigger_seconds: int | None = 10,
-):
-    """:func:`start_cdc` variant landing in a JDBC warehouse (see
-    :func:`process_microbatch_jdbc`)."""
-    writer = stream.writeStream.foreachBatch(
-        lambda df, _epoch: process_microbatch_jdbc(
-            spark, df, cfg, registry_dir, dialect=dialect
-        )
-    ).option("checkpointLocation", checkpoint_dir)
-    if trigger_seconds is None:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()

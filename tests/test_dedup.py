@@ -3,6 +3,7 @@ SimHash (SURVEY §2.5 + LLM extensions)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from oltp_to_data_warehouse_pipeline_spark.operators import dedup
@@ -146,6 +147,14 @@ def test_connected_components_long_chain_converges(spark):
     }
     assert set(labels) == set(range(1, 13))
     assert set(labels.values()) == {1}
+
+
+def test_connected_components_raises_when_unconverged(spark):
+    """Out of rounds with labels still moving is an error, not a result:
+    a 4-node chain needs more than one distributed round."""
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (3, 4)], ["doc_a", "doc_b"])
+    with pytest.raises(RuntimeError, match="1 rounds"):
+        dedup.connected_components(pairs, driver_max_edges=0, max_iter=1)
 
 
 def test_connected_components_random_graphs_match_union_find(spark):

@@ -175,6 +175,7 @@ def test_rescue_covers_zero_survivor_groups(spark):
     plain = kmv.kmv_sketch(df, "v", ["g"], k=1, prefilter=False)
     assert _rows(fast) == _rows(plain)
     assert len(_rows(fast)) == 1  # the group is present, k=1 row
+    assert sorted(kmv.kmv_sketch_rows(df, "v", ["g"], k=1)) == _rows(plain)
 
 
 def test_prefilter_keeps_null_group_keys(spark):
@@ -207,68 +208,64 @@ def test_intersect_safe_on_duplicate_hashes(spark):
 
 
 # ---------------------------------------------------------------------------
-# Round-12 bounded driver path (driver_max_rows) + broadcast-hint gate
-# (bounded_groups): the checkpoint-pin job floor replaced by one bounded
-# collect, with the distributed path as the past-the-bound fallback.
+# Bounded driver path (kmv_sketch_rows): the thresholds and survivors are
+# collected under DRIVER_MAX_ROWS instead of pinned; past it, None.
 # ---------------------------------------------------------------------------
 
 
-def _nrows(df):
+def _nrows(rows):
     # None-aware variant of _rows for fixtures with NULL group keys
     return sorted(
-        (tuple(r) for r in df.collect()),
+        (tuple(r) for r in rows),
         key=lambda t: tuple((x is None, 0 if x is None else x) for x in t),
     )
 
 
-def test_driver_path_matches_plain(spark):
-    """The bounded driver path must return the EXACT relation of the plain
-    formulation (which the oracle replays) — including NULL group keys
-    (a real group for groupBy) and the skewed case where thresholds
-    activate."""
-    ev = load_table(spark, SF, "events").withColumn("d", F.col("ts").cast("date"))
-    drv = kmv.kmv_sketch(ev, "user_id", ["d"], k=K, driver_max_rows=100_000)
-    assert kmv.is_driver_materialized(drv)
-    plain = kmv.kmv_sketch(ev, "user_id", ["d"], k=K, prefilter=False)
-    assert _nrows(drv) == _nrows(plain)
+# k=16: every group holds < SAFETY·k keys, so the thresholds admit all
+# and the survivors are exactly the distinct (g, v) pairs — the largest
+# collect, which the tests below put at and one past the bound
+_SMALL = [(g, v) for g, n in (("a", 40), ("b", 20), (None, 30)) for v in range(n)]
 
+
+def test_driver_path_matches_plain(spark, monkeypatch):
+    """kmv_sketch_rows must return the EXACT relation of the plain
+    formulation (which the oracle replays): at exactly DRIVER_MAX_ROWS
+    survivors, and with active thresholds and a NULL group key."""
+    df = spark.createDataFrame(_SMALL, "g string, v int")
+    plain = kmv.kmv_sketch(df, "v", ["g"], k=16, prefilter=False).collect()
+    monkeypatch.setattr(kmv, "DRIVER_MAX_ROWS", len(_SMALL))
+    assert _nrows(kmv.kmv_sketch_rows(df, "v", ["g"], k=16)) == _nrows(plain)
+
+    monkeypatch.undo()
     rows = [(g, v) for g in ("a", "b") for v in range(2000 if g == "a" else 20)]
-    rows += [(None, v) for v in range(500)]  # NULL group key is a group
+    rows += [(None, v) for v in range(500)]
     df = spark.createDataFrame(rows, "g string, v int")
     for k in (4, 16):
-        drv = kmv.kmv_sketch(df, "v", ["g"], k=k, driver_max_rows=100_000)
-        assert kmv.is_driver_materialized(drv)
-        plain = kmv.kmv_sketch(df, "v", ["g"], k=k, prefilter=False)
+        drv = kmv.kmv_sketch_rows(df, "v", ["g"], k=k)
+        plain = kmv.kmv_sketch(df, "v", ["g"], k=k, prefilter=False).collect()
         assert _nrows(drv) == _nrows(plain), f"k={k}"
 
 
-def test_driver_path_falls_back_past_bound(spark):
-    """driver_max_rows=1 trips the gate: the function must return the
-    distributed formulation (not a truncated local relation) and flag it
-    as NOT driver-materialized so callers re-pin."""
-    rows = [("a", v) for v in range(100)]
-    df = spark.createDataFrame(rows, "g string, v int")
-    out = kmv.kmv_sketch(df, "v", ["g"], k=8, driver_max_rows=1)
-    assert not kmv.is_driver_materialized(out)
-    plain = kmv.kmv_sketch(df, "v", ["g"], k=8, prefilter=False)
-    assert _nrows(out) == _nrows(plain)
+def test_driver_path_falls_back_past_bound(spark, monkeypatch):
+    """One survivor past DRIVER_MAX_ROWS: None, not a truncated sketch."""
+    df = spark.createDataFrame(_SMALL, "g string, v int")
+    monkeypatch.setattr(kmv, "DRIVER_MAX_ROWS", len(_SMALL) - 1)
+    assert kmv.kmv_sketch_rows(df, "v", ["g"], k=16) is None
 
 
-def test_unbounded_groups_gate_drops_broadcast_hints(spark):
-    """bounded_groups=False must leave the group-keyed audit joins to the
-    planner (round-11 verdict: a forced broadcast of one-row-per-group
-    relations is a driver OOM at high group cardinality).  With pinned
-    (stats-less) inputs the planner then sort-merges, which is the point;
-    the default keeps the round-11 broadcast shape."""
-    rows = [("a", v) for v in range(2000)] + [("b", v) for v in range(20)]
-    df = spark.createDataFrame(rows, "g string, v int")
-    hinted = kmv.kmv_sketch(df, "v", ["g"], k=4)._jdf.queryExecution().executedPlan().toString()
-    unhinted = kmv.kmv_sketch(
-        df, "v", ["g"], k=4, bounded_groups=False
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "SortMergeJoin" not in hinted
-    assert "SortMergeJoin" in unhinted
-    # and the gate changes the PLAN, not the relation
-    assert _nrows(kmv.kmv_sketch(df, "v", ["g"], k=4, bounded_groups=False)) == _nrows(
-        kmv.kmv_sketch(df, "v", ["g"], k=4, prefilter=False)
-    )
+def test_intersect_estimate_rows_matches_distributed(spark):
+    """The driver-side set-operation estimator replays the distributed
+    one bit-for-bit, in the exhaustive (m < k) and the estimator branch."""
+    for k, n in ((128, 50), (64, 3000)):
+        rows = [("a", v) for v in range(n)] + [("b", v) for v in range(n // 2, 2 * n)]
+        df = spark.createDataFrame(rows, "g string, v int")
+        sk = kmv.kmv_sketch(df, "v", ["g"], k=k)
+        sa, sb = sk.where(F.col("g") == "a"), sk.where(F.col("g") == "b")
+        want = kmv.kmv_intersect_estimate(sa, sb, k=k).collect()
+        got = kmv.kmv_intersect_estimate_rows(
+            spark,
+            [r["h"] for r in sa.collect()],
+            [r["h"] for r in sb.collect()],
+            k=k,
+        ).collect()
+        assert [tuple(r) for r in got] == [tuple(r) for r in want], f"k={k}"

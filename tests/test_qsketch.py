@@ -106,74 +106,3 @@ def test_null_keys_excluded_prefilter_parity(spark):
     plain = qsketch.qsample_sketch(d, "key", "val", ["g"], k=8, prefilter=False)
     assert _rows(fast) == _rows(plain)
     assert all(r["v"] != 999.0 for r in plain.collect())
-
-
-# ---------------------------------------------------------------------------
-# Round-12 bounded driver path + broadcast-hint gate (the kmv twin).
-# ---------------------------------------------------------------------------
-
-
-def _nrows(df):
-    # None-aware variant of _rows for fixtures with NULL group keys
-    return sorted(
-        (tuple(r) for r in df.collect()),
-        key=lambda t: tuple((x is None, 0 if x is None else x) for x in t),
-    )
-
-
-def test_driver_path_matches_plain(spark):
-    d = _fixture(spark)
-    drv = qsketch.qsample_sketch(
-        d, "key", "val", ["qtr", "mth"], k=64, driver_max_rows=100_000
-    )
-    from oltp_to_data_warehouse_pipeline_spark.operators import kmv as _kmv
-
-    assert _kmv.is_driver_materialized(drv)
-    plain = qsketch.qsample_sketch(
-        d, "key", "val", ["qtr", "mth"], k=64, prefilter=False
-    )
-    assert _nrows(drv) == _nrows(plain)
-
-
-def test_driver_path_skewed_and_null_groups(spark):
-    """Thresholds active on the big group, NULL group key kept, ties on
-    (h, v) resolved identically to the distributed rank."""
-    rows = [("a", i, float(i % 7)) for i in range(3000)]
-    rows += [("b", i, float(i)) for i in range(10)]
-    rows += [(None, i, 1.5) for i in range(300)]
-    df = spark.createDataFrame(rows, "g string, key int, val double")
-    for k in (4, 32):
-        drv = qsketch.qsample_sketch(
-            df, "key", "val", ["g"], k=k, driver_max_rows=100_000
-        )
-        plain = qsketch.qsample_sketch(
-            df, "key", "val", ["g"], k=k, prefilter=False
-        )
-        assert _nrows(drv) == _nrows(plain), f"k={k}"
-
-
-def test_driver_path_falls_back_past_bound(spark):
-    from oltp_to_data_warehouse_pipeline_spark.operators import kmv as _kmv
-
-    rows = [("a", i, i * 2) for i in range(100)]
-    df = spark.createDataFrame(rows, "g string, key int, val int")
-    out = qsketch.qsample_sketch(df, "key", "val", ["g"], k=8, driver_max_rows=1)
-    assert not _kmv.is_driver_materialized(out)
-    plain = qsketch.qsample_sketch(df, "key", "val", ["g"], k=8, prefilter=False)
-    assert _nrows(out) == _nrows(plain)
-
-
-def test_unbounded_groups_gate_drops_broadcast_hints(spark):
-    rows = [("a", i, i * 2) for i in range(3000)] + [("b", i, i) for i in range(10)]
-    df = spark.createDataFrame(rows, "g string, key int, val int")
-    hinted = qsketch.qsample_sketch(
-        df, "key", "val", ["g"], k=4
-    )._jdf.queryExecution().executedPlan().toString()
-    unhinted = qsketch.qsample_sketch(
-        df, "key", "val", ["g"], k=4, bounded_groups=False
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "SortMergeJoin" not in hinted
-    assert "SortMergeJoin" in unhinted
-    assert _nrows(
-        qsketch.qsample_sketch(df, "key", "val", ["g"], k=4, bounded_groups=False)
-    ) == _nrows(qsketch.qsample_sketch(df, "key", "val", ["g"], k=4, prefilter=False))

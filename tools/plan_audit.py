@@ -10,6 +10,7 @@ Usage:  python tools/plan_audit.py [sf_dir] [--write]
 
 from __future__ import annotations
 
+import ast
 import hashlib
 import re
 import sys
@@ -21,8 +22,29 @@ _REPO = Path(__file__).resolve().parent.parent
 _PACKAGE = _REPO / "oltp_to_data_warehouse_pipeline_spark"
 
 
+_DOCSTRING_OWNERS = (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)
+
+
+def _code_dump(src: str) -> str:
+    """``ast.dump`` of a module with every docstring removed: comments,
+    docstrings and layout drop out, any change to the code itself does
+    not."""
+    tree = ast.parse(src)
+    for node in ast.walk(tree):
+        body = getattr(node, "body", None)
+        if (
+            isinstance(node, _DOCSTRING_OWNERS)
+            and body
+            and isinstance(body[0], ast.Expr)
+            and isinstance(body[0].value, ast.Constant)
+            and isinstance(body[0].value.value, str)
+        ):
+            node.body = body[1:] or [ast.Pass()]
+    return ast.dump(tree)
+
+
 def source_fingerprint() -> str:
-    """Stable hash of every .py file in the package, by relative path.
+    """Stable hash of every .py file's code in the package, by relative path.
 
     Embedded in PLANS.md's header and re-derived by the freshness test
     (tests/test_plans.py), so a plan-affecting source change that isn't
@@ -30,13 +52,16 @@ def source_fingerprint() -> str:
     stale plan audit (the round-4 hygiene miss).  A content hash is used
     rather than a git commit hash because PLANS.md is committed TOGETHER
     with the change it describes — a HEAD hash would always be one commit
-    behind itself.
+    behind itself.  Each file is hashed as its docstring-free AST dump
+    (:func:`_code_dump`), so comment- and docstring-only edits keep the
+    fingerprint while every code edit changes it.  ``ast.dump``'s format
+    follows the interpreter, so regenerate after a Python upgrade.
     """
     h = hashlib.sha256()
     for p in sorted(_PACKAGE.rglob("*.py")):
         h.update(str(p.relative_to(_REPO)).encode())
         h.update(b"\0")
-        h.update(p.read_bytes())
+        h.update(_code_dump(p.read_text()).encode())
     return h.hexdigest()[:16]
 
 
@@ -60,8 +85,8 @@ def audit(sf_dir: str = "/root/testdata/sf0.001") -> str:
         "# Plan audit (generated by tools/plan_audit.py)",
         "",
         f"Source fingerprint: `{source_fingerprint()}` (sha256 over the "
-        "package's .py files; tests/test_plans.py fails when this no longer "
-        "matches the working tree — regenerate with "
+        "docstring-free ASTs of the package's .py files; tests/test_plans.py "
+        "fails when this no longer matches the working tree — regenerate with "
         "`python tools/plan_audit.py --write`).",
         "",
         f"Per-query physical plan characteristics at `{sf_dir}`.",

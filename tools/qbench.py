@@ -6,7 +6,9 @@ Same methodology as bench.py (sf0.001 codegen warm pass, untimed warm run
 at the target sf, min-of-k noop-sink samples, persisted-state cleanup
 between samples outside the timed window) so numbers are comparable to
 BENCH_DETAIL.json — for iterating on a single query without paying the
-whole 63-query run.
+whole 63-query run.  Each query's line on stderr also carries the Spark
+job counts of its fastest sample: jobs fired while building the
+DataFrame (``build_jobs``) and while executing it (``exec_jobs``).
 """
 
 from __future__ import annotations
@@ -52,25 +54,42 @@ def main() -> None:
     if not os.path.isdir(warm_dir):
         warm_dir = sf_dir
 
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def jobs(group: str) -> int:
+        return len(tracker.getJobIdsForGroup(group))
+
     out: dict[str, float] = {}
     for name in names:
         fn = queries[name]
-        spark.sparkContext.setJobDescription(f"qbench:{name}")
+        sc.setJobDescription(f"qbench:{name}")
         fn(spark, warm_dir).write.format("noop").mode("overwrite").save()
         drop_persisted()
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         drop_persisted()
         best = float("inf")
         samples = []
-        for _ in range(k):
+        for i in range(k):
+            # construction jobs (schema inference, eager pins, sizing
+            # collects) and execution jobs are counted per job group
+            build, run = f"qbench:{name}:{i}:build", f"qbench:{name}:{i}:exec"
+            sc.setJobGroup(build, name)
             t0 = time.time()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            df = fn(spark, sf_dir)
+            sc.setJobGroup(run, name)
+            df.write.format("noop").mode("overwrite").save()
             dt = time.time() - t0
             samples.append(round(dt, 3))
-            best = min(best, dt)
+            if dt < best:
+                best, best_jobs = dt, (jobs(build), jobs(run))
             drop_persisted()
         out[name] = round(best, 3)
-        print(f"{name}: min={best:.3f}s samples={samples}", file=sys.stderr)
+        print(
+            f"{name}: min={best:.3f}s build_jobs={best_jobs[0]} "
+            f"exec_jobs={best_jobs[1]} samples={samples}",
+            file=sys.stderr,
+        )
     print(json.dumps(out))
 
 
